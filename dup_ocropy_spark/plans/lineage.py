@@ -25,10 +25,22 @@ def row_checksum_col(cols: tuple[str, ...] = _ID_COLS):
     return F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols])
 
 
+def count_and_checksum(df: DataFrame, cols: tuple[str, ...] = _ID_COLS) -> tuple[int, int]:
+    """(row count, order-insensitive checksum) of a DataFrame in one
+    aggregate, i.e. one pass over its input."""
+    row = df.agg(F.count("*").alias("n"),
+                 F.bit_xor(row_checksum_col(cols)).alias("c")).collect()[0]
+    return row["n"], (row["c"] if row["c"] is not None else 0)
+
+
 def dataset_checksum(df: DataFrame, cols: tuple[str, ...] = _ID_COLS) -> int:
     """Single order-insensitive checksum over a DataFrame (test helper)."""
-    row = df.agg(F.bit_xor(row_checksum_col(cols)).alias("c")).collect()[0]
-    return row["c"] if row["c"] is not None else 0
+    return count_and_checksum(df, cols)[1]
+
+
+def lineage_path(out_path: str) -> str:
+    """Where ``write_output_with_lineage`` puts the lineage table."""
+    return out_path.rstrip("/") + "_lineage"
 
 
 def lineage_for_output(spark: SparkSession, out_path: str,
@@ -52,5 +64,5 @@ def write_output_with_lineage(extracted: DataFrame, out_path: str,
     extracted.write.mode("overwrite").parquet(out_path)
     wall_ms = int((time.time() - t0) * 1000)
     lin = lineage_for_output(spark, out_path, source_snapshot, wall_ms)
-    lin.write.mode("overwrite").parquet(out_path.rstrip("/") + "_lineage")
+    lin.write.mode("overwrite").parquet(lineage_path(out_path))
     return lin

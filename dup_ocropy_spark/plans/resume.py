@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
 from dup_ocropy_spark.plans.extract import extract
-from dup_ocropy_spark.plans.lineage import dataset_checksum
+from dup_ocropy_spark.plans.lineage import count_and_checksum
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -79,11 +79,12 @@ def run_with_checkpoints(transcripts: DataFrame, out_dir: str, n_buckets: int = 
         out = extract(part, config, salted=salted)
         path = os.path.join(out_dir, f"bucket={b}")
         out.write.mode("overwrite").parquet(path)  # idempotent overwrite
-        committed = transcripts.sparkSession.read.parquet(path)
+        # one read-back of what durably landed: count and checksum together
+        rows, checksum = count_and_checksum(transcripts.sparkSession.read.parquet(path))
         entry = {
             "bucket": b,
-            "row_count": committed.count(),
-            "checksum": dataset_checksum(committed),
+            "row_count": rows,
+            "checksum": checksum,
             "source_snapshot": source_snapshot,
             "wall_ms": int((time.time() - t0) * 1000),
         }

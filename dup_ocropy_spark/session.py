@@ -15,6 +15,28 @@ from pyspark.sql import SparkSession
 from dup_ocropy_spark.config import DEFAULT_CONFIG
 
 
+# driver heap when SPARK_DRIVER_MEMORY is unset: half of the memory the
+# host has available at launch, clamped to [1 GiB, 16 GiB], so a heap
+# sized for a big host never asks a small one for more than it has
+_DRIVER_MEMORY_MB = (1024, 16384)
+_DRIVER_MEMORY_FALLBACK = "4g"  # no /proc/meminfo (non-Linux hosts)
+
+
+def driver_memory(environ=os.environ, meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for a new session: ``SPARK_DRIVER_MEMORY``
+    if set, else derived from ``MemAvailable`` in ``meminfo``."""
+    if environ.get("SPARK_DRIVER_MEMORY"):
+        return environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            avail_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return _DRIVER_MEMORY_FALLBACK
+    lo, hi = _DRIVER_MEMORY_MB
+    return f"{max(lo, min(hi, avail_kb // 2048))}m"
+
+
 def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
               shuffle_partitions: int | None = None,
               arrow_batch_rows: int | None = None,
@@ -61,7 +83,7 @@ def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "256m"))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

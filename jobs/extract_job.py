@@ -48,7 +48,11 @@ def main(argv: list[str]) -> int:
                     help="salted pre-shuffle on xxhash64(conv_id, turn_idx): "
                          "use when the input layout clusters conversations "
                          "(time-ordered ingest); unnecessary for hash-"
-                         "scrambled or bucket(conv_id) layouts")
+                         "scrambled or bucket(conv_id) layouts. Applies "
+                         "only with --buckets N>0: the single-pass path "
+                         "orders its output by a range shuffle on "
+                         "(conv_id, turn_idx), which already splits a hot "
+                         "conversation")
     ap.add_argument("--turn-fp-out", default=None, metavar="DIR",
                     help="also append TURN-grain payload fingerprints of "
                          "this batch to DIR — the table "
@@ -58,9 +62,11 @@ def main(argv: list[str]) -> int:
                          "snapshot)")
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from dup_ocropy_spark.config import ExtractConfig
     from dup_ocropy_spark.plans.extract import extract, ordered, reject_report
-    from dup_ocropy_spark.plans.lineage import write_output_with_lineage
+    from dup_ocropy_spark.plans.lineage import lineage_path, write_output_with_lineage
     from dup_ocropy_spark.plans.resume import run_with_checkpoints
     from dup_ocropy_spark.session import get_spark
 
@@ -82,7 +88,9 @@ def main(argv: list[str]) -> int:
     else:
         out = ordered(extract(transcripts, config, salted=args.salted))
         write_output_with_lineage(out, args.output, args.snapshot)
-        n_rows = spark.read.parquet(args.output).count()
+        # the lineage table just written already counts every output file
+        n_rows = (spark.read.parquet(lineage_path(args.output))
+                  .agg(F.sum("row_count")).first()[0] or 0)
     wall = time.time() - t0
 
     n_fps = None

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from dup_ocropy_spark.kernels.oracle import extract_frame
-from dup_ocropy_spark.plans.extract import conversation_text, extract, ordered, reject_report
+from dup_ocropy_spark.plans.extract import (
+    KERNEL_BATCH_ROWS, conversation_text, extract, make_extract_stage, ordered, reject_report,
+)
 from dup_ocropy_spark.plans.lineage import dataset_checksum, write_output_with_lineage
 from dup_ocropy_spark.plans.resume import committed_buckets, read_checkpointed, run_with_checkpoints
 from dup_ocropy_spark.sources.transcripts import (
@@ -71,6 +73,42 @@ def test_ordered_output_is_totally_ordered(spark, transcripts):
     rows = ordered(extract(transcripts)).select("conv_id", "turn_idx").collect()
     keys = [(r.conv_id, r.turn_idx) for r in rows]
     assert keys == sorted(keys)
+
+
+def test_ordered_ranges_input_before_kernel(spark, tmp_path):
+    """ordered() range-partitions the input keys, so the range exchange
+    (and its bound sampler) sits below the one kernel stage instead of
+    above it, where sampling would run the kernel a second time."""
+    path = str(tmp_path / "tr")
+    write_transcripts(spark, path, 10)
+    out = ordered(extract(spark.read.parquet(path), salted=True))
+    out.write.mode("overwrite").format("noop").save()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    assert "hashpartitioning" not in final, final  # salted shuffle dropped
+    assert final.index("MapInPandas") < final.index("rangepartitioning"), final
+
+
+def test_ordered_rejects_other_dataframes(spark, transcripts):
+    with pytest.raises(TypeError, match="extract"):
+        ordered(transcripts)
+    with pytest.raises(TypeError, match="extract"):
+        ordered(extract(transcripts).select("conv_id", "turn_idx"))
+
+
+def test_extract_stage_caps_kernel_rows(transcripts):
+    """A batch above the kernel row cap comes back as the same frame one
+    extract_frame call gives; an empty batch yields nothing."""
+    pdf = transcripts.toPandas()
+    assert len(pdf) > KERNEL_BATCH_ROWS
+    stage = make_extract_stage()
+    parts = list(stage(iter([pdf])))
+    assert len(parts) == -(-len(pdf) // KERNEL_BATCH_ROWS)
+    assert all(len(p) <= KERNEL_BATCH_ROWS for p in parts)
+    got = pd.concat(parts, ignore_index=True)
+    pd.testing.assert_frame_equal(got, extract_frame(pdf))
+    assert list(stage(iter([pdf.iloc[:0]]))) == []
 
 
 def test_skewed_hot_conversation(spark):
